@@ -15,8 +15,8 @@ Scale notes:
   SURVEY.md §4 item 3);
 * convergence check = count + checksum of the edge set, observed
   DURING the round's checkpoint job (zero extra actions per round);
-* node ids are conv_id strings under lexicographic order; a dictionary
-  encoding to longs is a further optimization at 10^12 scale.
+* node ids are conv_id strings under lexicographic order (the pipeline
+  keeps one string id type end to end; docs/TUNING.md says why).
 """
 
 from __future__ import annotations
@@ -162,7 +162,9 @@ def connected_components(
     ``$SPARK_GRAFT_CC_LOCAL_MAX`` = 200k) are labeled by a driver-side
     union-find — a bounded collect decided by the edge count the
     convergence observation already produces for free; larger graphs
-    run the unchanged distributed large-star/small-star rounds."""
+    run the unchanged distributed large-star/small-star rounds, which
+    raise ``RuntimeError`` if the edge set reaches no fixpoint within
+    ``max_iter`` rounds."""
     spark = edges.sparkSession
     obs0 = Observation()
     cur = (
@@ -209,6 +211,12 @@ def connected_components(
                 break
             prev_fp = fp
             spark.conf.set(sp_key, str(_partitions_for(int(got["n"] or 0))))
+        else:
+            # unconverged labels would silently split clusters
+            raise RuntimeError(
+                f"connected_components did not converge in {max_iter} "
+                f"rounds ({n_edges} input edges); raise max_iter"
+            )
     finally:
         spark.conf.set(sp_key, orig)
     # converged: every edge points node -> component root

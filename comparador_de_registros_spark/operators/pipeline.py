@@ -61,7 +61,6 @@ T_VERIFIED = "verified"
 T_CLUSTERS = "clusters"
 T_METRICS = "metrics"
 T_LINEAGE = "lineage"
-T_IDMAP = "id_map"
 
 
 def _count_if(cond: Column) -> Column:
@@ -96,9 +95,10 @@ class DedupPipeline:
         metric_cols: dict[str, Column],
         repartition_by: str | None = None,
         num_files: int | None = None,
-    ) -> None:
+    ) -> dict[str, float]:
         """Write a stage output with metrics observed during the SAME
-        job (no extra actions), then persist the metrics row."""
+        job (no extra actions), persist the metrics row, and return
+        it."""
         obs = Observation(f"{self.run_id}_{stage}")
         df = df.observe(
             obs, *[c.alias(name) for name, c in metric_cols.items()]
@@ -116,6 +116,7 @@ class DedupPipeline:
         metrics = {k: float(v if v is not None else 0) for k, v in obs.get.items()}
         self._log_metrics(spark, stage, metrics)
         self._log_lineage(spark, stage, table)
+        return metrics
 
     def _log_metrics(self, spark: SparkSession, stage: str, rows: dict[str, float]):
         data = [
@@ -230,45 +231,9 @@ class DedupPipeline:
             },
         )
 
-    # --- int64 id dictionary (cfg.encode_ids) ---------------------------
-
-    def _write_id_map(self, spark: SparkSession) -> None:
-        """Per-run dictionary conv_id(string) -> id(int64), covering
-        every doc. Ids are unique by construction
-        (``monotonically_increasing_id`` = partition id << 33 | local
-        counter) and become DETERMINISTIC the moment the table is
-        written: every later stage joins this one checkpoint, and the
-        cluster output is re-canonicalized to min-conv_id string labels
-        so nothing downstream depends on the particular id values."""
-        docs = self.catalog.read(spark, T_DOCS)
-        id_map = docs.select("conv_id").withColumn(
-            "id", F.monotonically_increasing_id()
-        )
-        self.catalog.write(id_map, T_IDMAP)
-
-    def _id_map(self, spark: SparkSession) -> DataFrame:
-        return self.catalog.read(spark, T_IDMAP)
-
-    @staticmethod
-    def _encode_col(df: DataFrame, id_map: DataFrame, col: str) -> DataFrame:
-        """Replace string id column ``col`` with its int64 encoding."""
-        m = id_map.select(
-            F.col("conv_id").alias(col), F.col("id").alias(f"__{col}_enc")
-        )
-        return (
-            df.join(m, col)
-            .drop(col)
-            .withColumnRenamed(f"__{col}_enc", col)
-        )
-
     def stage_sign(self, spark: SparkSession) -> None:
         docs = self.catalog.read(spark, T_DOCS)
         exact_map = self.catalog.read(spark, T_EXACT)
-        if self.cfg.encode_ids:
-            # written BEFORE signatures: the signatures _SUCCESS marker
-            # is the sign stage's resume point, so its presence implies
-            # the id dictionary exists too
-            self._write_id_map(spark)
         reps = docs.join(
             exact_map.where(F.col("conv_id") == F.col("rep_id")).select("rep_id"),
             docs["conv_id"] == F.col("rep_id"),
@@ -307,8 +272,6 @@ class DedupPipeline:
 
     def stage_candidates(self, spark: SparkSession) -> None:
         sigs = self.catalog.read(spark, T_SIGN)
-        if self.cfg.encode_ids:
-            sigs = self._encode_col(sigs, self._id_map(spark), "conv_id")
         cand, dropped, buckets = lsh_ops.unified_candidates(
             sigs,
             self.cfg.lsh,
@@ -369,16 +332,28 @@ class DedupPipeline:
         finally:
             buckets.unpersist()
 
+    def _read_pairs(self, spark: SparkSession, table: str) -> DataFrame:
+        """Read a pair checkpoint (a, b, ...) keyed by conv_id strings."""
+        pairs = self.catalog.read(spark, table)
+        a_type = dict(pairs.dtypes)["a"]
+        if a_type != "string":
+            # stale-checkpoint guard (same shape as the doc_hash one in
+            # stage_exact): pair tables written by the removed int64
+            # conv_id dictionary path carry bigint ids, which no longer
+            # match the string conv_ids of docs/signatures/exact_map —
+            # fail with the cause and the fix instead of a wrong join
+            raise ValueError(
+                f"pair checkpoint {table!r} ({self.catalog!r}) has "
+                f"{a_type} pair ids, not conv_id strings — it was written "
+                "by the removed int64 conv_id dictionary path. Re-run "
+                "from the candidates stage without resume=True."
+            )
+        return pairs
+
     def stage_verify(self, spark: SparkSession) -> None:
-        cand = self.catalog.read(spark, T_CAND)
+        cand = self._read_pairs(spark, T_CAND)
         sigs = self.catalog.read(spark, T_SIGN)
         docs = self.catalog.read(spark, T_DOCS)
-        if self.cfg.encode_ids:
-            id_map = self._id_map(spark)
-            sigs = self._encode_col(sigs, id_map, "conv_id")
-            docs = self._encode_col(
-                docs.select("conv_id", "norm"), id_map, "conv_id"
-            )
         # the candidate-pair count is free from the checkpoint's parquet
         # footers (lineage metadata, no scan) and unlocks verify's
         # small/medium plans — at bench scale the large shared-exchange
@@ -389,7 +364,7 @@ class DedupPipeline:
         )
         verified = verify_pairs(cand, sigs, docs, self.cfg, n_candidates=n_cand)
         try:
-            self._write_observed(
+            m = self._write_observed(
                 spark,
                 verified,
                 T_VERIFIED,
@@ -401,9 +376,20 @@ class DedupPipeline:
             )
         finally:
             release_scored(verified)
+        # runtime invariant: every candidate pair is either a verified
+        # dup or a rejection. A mismatch drops the output so a resumed
+        # run cannot build clusters on it.
+        n_out = int(m["n_verified_dups"] + m["n_rejected"])
+        if n_out != n_cand:
+            self.catalog.drop(T_VERIFIED)
+            raise RuntimeError(
+                f"verify accounted for {n_out} of {n_cand} candidate pairs "
+                f"({m['n_verified_dups']:.0f} dups + {m['n_rejected']:.0f} "
+                f"rejected); the {T_VERIFIED!r} table was dropped"
+            )
 
     def stage_cluster(self, spark: SparkSession) -> None:
-        verified = self.catalog.read(spark, T_VERIFIED)
+        verified = self._read_pairs(spark, T_VERIFIED)
         exact_map = self.catalog.read(spark, T_EXACT)
         docs = self.catalog.read(spark, T_DOCS)
 
@@ -411,42 +397,15 @@ class DedupPipeline:
         member_edges = exact_map.where(F.col("conv_id") != F.col("rep_id")).select(
             F.col("conv_id").alias("a"), F.col("rep_id").alias("b")
         )
-        doc_ids = docs.select("conv_id")
-        id_map = None
-        if self.cfg.encode_ids:
-            # member edges + singleton universe to int64; dup_edges are
-            # already encoded (the candidates stage emitted long ids)
-            id_map = self._id_map(spark)
-            member_edges = self._encode_col(
-                self._encode_col(member_edges, id_map, "a"), id_map, "b"
-            )
-            doc_ids = self._encode_col(doc_ids, id_map, "conv_id")
-        edges = dup_edges.unionByName(member_edges)
-        comp = connected_components(edges)
+        comp = connected_components(dup_edges.unionByName(member_edges))
         clusters = (
-            doc_ids
+            docs.select("conv_id")
             .join(comp, "conv_id", "left")
             .select(
                 "conv_id",
                 F.coalesce("cluster_id", F.col("conv_id")).alias("cluster_id"),
             )
         )
-        if self.cfg.encode_ids:
-            # decode + re-canonicalize: label every cluster with its
-            # MINIMUM conv_id STRING, making the output bit-identical to
-            # the unencoded path (and independent of the run-specific id
-            # dictionary). Two small shuffles over the slim clusters
-            # table only.
-            named = clusters.join(
-                id_map.select("id", F.col("conv_id").alias("__s")),
-                clusters["conv_id"] == F.col("id"),
-            ).select(F.col("__s").alias("conv_id"), "cluster_id")
-            labels = named.groupBy("cluster_id").agg(
-                F.min("conv_id").alias("__label")
-            )
-            clusters = named.join(labels, "cluster_id").select(
-                "conv_id", F.col("__label").alias("cluster_id")
-            )
         self._write_observed(
             spark,
             clusters,

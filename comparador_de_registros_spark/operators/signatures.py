@@ -339,15 +339,22 @@ def scan_is_narrow(spark, df: DataFrame, cores: int) -> bool:
     second-largest fixed cost of the bench's minhash line). Non-file
     sources (local relations in tests) keep the .rdd probe; frames with
     >512 files are treated as wide (at that width the spread decision
-    is irrelevant and per-file RPCs are not)."""
+    is irrelevant and per-file RPCs are not). The estimate is a
+    heuristic and must never fail a query: any error on the metadata
+    path (a file deleted since the listing, a JVM call that fails)
+    falls back to the .rdd probe."""
     try:
         files = df.inputFiles()
+        if len(files) >= 512:
+            return False
+        if files:
+            return _estimated_splits(spark, files) < cores
     except Exception:
-        files = []
-    if not files:
-        return df.rdd.getNumPartitions() < cores
-    if len(files) >= 512:
-        return False
+        pass
+    return df.rdd.getNumPartitions() < cores
+
+
+def _estimated_splits(spark, files: list[str]) -> int:
     jvm = spark._jvm
     ju = jvm.org.apache.spark.network.util.JavaUtils
     mpb = ju.byteStringAsBytes(
@@ -368,8 +375,7 @@ def scan_is_narrow(spark, df: DataFrame, cores: int) -> bool:
     # bins; this ceiling matches that for small files and underestimates
     # only when single files exceed mpb — exactly the case where the
     # scan is already wide.
-    est = (total + len(files) * open_cost + mpb - 1) // mpb
-    return est < cores
+    return (total + len(files) * open_cost + mpb - 1) // mpb
 
 
 def compute_signatures(docs: DataFrame, cfg: DedupConfig) -> DataFrame:

@@ -119,14 +119,6 @@ class DedupConfig:
     # the worst aggregation task ~MBs; raise for corpora with genuinely
     # long conversations.
     max_turns_per_conv: int | None = 10_000
-    # Dictionary-encode conv_ids to int64 for the candidates -> verify
-    # -> cluster path (docs/TUNING.md): string conv_ids at 10^12-turn
-    # scale triple the shuffle key bytes of the two biggest shuffles
-    # and every CC round. The mapping table is a per-run checkpoint
-    # (id_map); cluster output is decoded back to strings and
-    # re-canonicalized to min-conv_id labels, so the output table is
-    # bit-identical to the unencoded path (parity-tested).
-    encode_ids: bool = False
     # Verify-stage participant filter: the candidate-pair id set is
     # broadcast into a semi-join that prunes the signature table BEFORE
     # its single shared exchange, so only conversations that appear in

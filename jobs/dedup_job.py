@@ -13,6 +13,11 @@ Each stage reads the previous checkpoint table and writes its own, so a
 killed run restarts at the first incomplete stage; metrics land in the
 ``metrics`` table keyed by run id. On a real cluster pass an Iceberg
 namespace via --iceberg instead of a parquet dir.
+
+conv_id stays a string in every checkpoint table. A workdir whose
+candidates/verified tables hold bigint ids (written by the removed int64
+id dictionary) cannot be resumed: re-run with --stage
+candidates,verify,cluster and without --resume.
 """
 
 from __future__ import annotations
@@ -55,12 +60,6 @@ def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
     p.add_argument("--rows", type=int, default=4)
     p.add_argument("--jaccard", type=float, default=0.8)
     p.add_argument("--max-bucket", type=int, default=2000)
-    p.add_argument(
-        "--encode-ids", action="store_true",
-        help="dictionary-encode conv_ids to int64 for the candidates/"
-        "verify/cluster path (recommended at >=10^9-doc scale; output "
-        "clusters table is identical either way)",
-    )
     return p.parse_args(argv)
 
 
@@ -73,7 +72,6 @@ def main(argv: list[str] | None = None) -> None:
             bands=args.bands, rows=args.rows, max_bucket_size=args.max_bucket
         ),
         jaccard_threshold=args.jaccard,
-        encode_ids=args.encode_ids,
     )
     spark = build_spark(app_name=f"cdr-dedup-{args.run_id}")
     catalog = (

@@ -228,6 +228,32 @@ def test_connected_components_local_matches_distributed(spark):
     )
 
 
+def test_connected_components_nonconvergence_raises(spark):
+    """Running out of rounds before the edge-set fixpoint must raise,
+    not return unconverged labels."""
+    edges = spark.createDataFrame(
+        [(f"n{i:02d}", f"n{i+1:02d}") for i in range(40)], ["a", "b"]
+    )
+    with pytest.raises(RuntimeError, match="did not converge in 1 rounds"):
+        connected_components(edges, local_max_edges=0, max_iter=1)
+
+
+def test_scan_is_narrow_survives_deleted_file(spark, tmp_path):
+    """The split estimate is a heuristic: a file that vanished after the
+    frame was built must fall back to the .rdd probe, not fail."""
+    import glob
+    import os
+
+    from comparador_de_registros_spark.operators.signatures import scan_is_narrow
+
+    path = str(tmp_path / "t")
+    spark.range(100).repartition(2).write.parquet(path)
+    df = spark.read.parquet(path)
+    assert len(df.inputFiles()) == 2
+    os.remove(sorted(glob.glob(os.path.join(path, "*.parquet")))[0])
+    assert isinstance(scan_is_narrow(spark, df, 4), bool)
+
+
 def test_pipeline_recall_vs_oracle(spark, pipeline_result):
     catalog, pipe, clusters = pipeline_result
     docs = catalog.read(spark, T_DOCS)
@@ -464,25 +490,52 @@ def test_shares_min_overlap_agrees_with_lcs():
         assert shares_min_overlap(a, b, k) == (lcs_len(a, b) >= k), (a, b, k)
 
 
-def test_encoded_ids_pipeline_parity(spark, turns, tmp_path):
-    """cfg.encode_ids=True runs candidates/verify/cluster on int64
-    dictionary ids (docs/TUNING.md shuffle-byte note) but must produce a
-    clusters table BIT-IDENTICAL to the string path: the output is
-    decoded and re-canonicalized to min-conv_id string labels, so
-    nothing observable depends on the run-specific id dictionary."""
-    outs = {}
-    for flag in (False, True):
-        cat = ParquetCatalog(str(tmp_path / f"enc_{flag}"))
-        pipe = DedupPipeline(
-            catalog=cat, cfg=DedupConfig(encode_ids=flag),
-            run_id="e", metrics_mode="deferred",
-        )
-        clusters = pipe.run(spark, turns)
-        outs[flag] = sorted(
-            (r["conv_id"], r["cluster_id"]) for r in clusters.collect()
-        )
-        # encoded intermediates really are int64 (the point of the flag)
-        if flag:
-            cand = cat.read(spark, "candidates")
-            assert dict(cand.dtypes)["a"] == "bigint"
-    assert outs[False] == outs[True]
+def test_stale_bigint_pair_checkpoint_rejected(spark, tmp_path):
+    """Pair checkpoints written by the removed int64 conv_id dictionary
+    path carry bigint ids; resuming verify or cluster over them must
+    fail with the cause and the fix, not join them to string conv_ids."""
+    catalog = ParquetCatalog(str(tmp_path))
+    pipe = DedupPipeline(catalog=catalog, cfg=DedupConfig(), run_id="t")
+    cand = spark.createDataFrame(
+        [(0, 1, ["lsh"])], "a long, b long, sources array<string>"
+    )
+    catalog.write(cand, "candidates")
+    with pytest.raises(ValueError, match="'candidates'.*bigint.*candidates stage"):
+        pipe.stage_verify(spark)
+    verified = spark.createDataFrame([(0, 1, True)], "a long, b long, is_dup boolean")
+    catalog.write(verified, "verified")
+    with pytest.raises(ValueError, match="'verified'.*bigint.*candidates stage"):
+        pipe.stage_cluster(spark)
+
+
+def test_verify_stage_fails_on_unaccounted_candidates(
+    spark, pipeline_result, tmp_path, monkeypatch
+):
+    """Runtime invariant: n_verified_dups + n_rejected == n_candidates.
+    A verify that loses a pair fails the stage and leaves no verified
+    checkpoint for a resumed run to cluster."""
+    import shutil
+
+    from comparador_de_registros_spark.operators import pipeline as pipeline_mod
+    from comparador_de_registros_spark.operators.verify import release_scored
+
+    src, _, _ = pipeline_result
+    for table in ("docs", "signatures", "candidates"):
+        shutil.copytree(src.path(table), str(tmp_path / table))
+    catalog = ParquetCatalog(str(tmp_path))
+    real = pipeline_mod.verify_pairs
+    made = []
+
+    def lossy(*args, **kwargs):
+        made.append(real(*args, **kwargs))
+        return made[0].exceptAll(made[0].orderBy("a", "b").limit(1))
+
+    monkeypatch.setattr(pipeline_mod, "verify_pairs", lossy)
+    pipe = DedupPipeline(catalog=catalog, cfg=DedupConfig(), run_id="t")
+    try:
+        with pytest.raises(RuntimeError, match="accounted for"):
+            pipe.stage_verify(spark)
+    finally:
+        # the stage releases the lossy frame, not the caches under it
+        release_scored(made[0])
+    assert not catalog.exists("verified")
