@@ -162,23 +162,6 @@ def char_shingles(text: str, k: int, seed: int = 0) -> np.ndarray:
     return np.unique(rolling_kgram_hashes(text.encode("utf-8"), k, seed))
 
 
-def word_shingles(text: str, k: int, seed: int = 0) -> np.ndarray:
-    """Distinct hashed k-token shingles (tokens joined by 0x1f)."""
-    tokens = text.split()
-    if len(tokens) < k:
-        joined = "\x1f".join(tokens)
-        if not joined:
-            return np.empty(0, dtype=_U64)
-        return np.array([hash_bytes(joined.encode("utf-8"), seed)], dtype=_U64)
-    grams = [
-        "\x1f".join(tokens[i : i + k]).encode("utf-8")
-        for i in range(len(tokens) - k + 1)
-    ]
-    return np.unique(
-        np.array([hash_bytes(g, seed) for g in grams], dtype=_U64)
-    )
-
-
 def minhash_signature(
     shingles: np.ndarray, seeds: np.ndarray, empty_fill: int = 0
 ) -> np.ndarray:

@@ -22,7 +22,6 @@ from comparador_de_registros_spark.operators.signatures import (
 )
 from comparador_de_registros_spark.operators.verify import (
     release_scored,
-    union_candidates,
     verify_pairs,
 )
 from comparador_de_registros_spark.plans.configs import DedupConfig
@@ -136,13 +135,6 @@ def ngram_jaccard_pairs(
     )
 
 
-def _docs_as_convs(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    return docs.select(
-        F.col(id_col).cast("string").alias("conv_id"),
-        F.col(text_col).alias("doc"),
-    ).withColumn("norm", normalize_doc_col(F.col("doc")))
-
-
 def signature_dup_pairs(
     docs: DataFrame,
     cfg: DedupConfig | None = None,
@@ -185,12 +177,7 @@ def signature_dup_pairs(
         "conv_id", normalize_doc_col(F.col("doc")).alias("norm")
     )
     sigs = compute_signatures(convs, cfg).persist()
-    cand, _, _ = lsh_ops.unified_candidates(
-        sigs,
-        cfg.lsh,
-        cfg.simhash if cfg.use_simhash else None,
-        cfg.use_substring,
-    )
+    cand, _, _ = lsh_ops.unified_candidates(sigs, cfg.lsh, cfg.simhash)
     # persist the (slim) candidate pairs: verify_pairs consumes the
     # candidates plan more than once — the participant id set it
     # broadcasts for the shared sig exchange, plus the pair joins. In
@@ -203,8 +190,15 @@ def signature_dup_pairs(
     # pair joins are submitted concurrently, so a lazy persist races —
     # both consumers can start before either populates it.
     cand = cand.persist()
-    n_cand = cand.count()
-    out = verify_pairs(cand, sigs, convs, cfg, n_candidates=n_cand)
+    try:
+        n_cand = cand.count()
+        out = verify_pairs(cand, sigs, convs, cfg, n_candidates=n_cand)
+    except BaseException:
+        # no result frame reaches the caller, so release_signature_run
+        # can never see these caches: drop them here
+        cand.unpersist()
+        sigs.unpersist()
+        raise
     out._cdr_sigs = sigs
     out._cdr_cand = cand
     return out

@@ -2,11 +2,12 @@
 blocks, and winnowed substring anchors.
 
 All three generators share the same physical shape — explode a per-doc
-key set, equi self-join on the key, keep ``a < b`` — which Catalyst
-plans as a shuffled hash/sort-merge join on the key. Everything here is
-native Column expressions (band hashing via ``F.hash`` over signature
-slices, SimHash blocks via shifts/masks, Hamming verify via
-``bit_count(a ^ b)``): zero Python in the candidate path.
+key set, group by the key, enumerate the ``a < b`` pairs inside each
+bucket — so :func:`unified_candidates` runs them as one grouping over a
+composite key. Everything here is native Column expressions (band
+hashing via ``F.hash`` over signature slices, SimHash blocks via
+shifts/masks, Hamming verify via ``bit_count(a ^ b)``): zero Python in
+the candidate path.
 
 Skew handling (north_rule: "partitioning / shuffle / skew handled
 explicitly"):
@@ -75,100 +76,27 @@ def lsh_band_keys(sig_col: str, cfg: LshConfig) -> Column:
     )
 
 
-def minhash_lsh_candidates(
-    signatures: DataFrame, cfg: LshConfig
-) -> tuple[DataFrame, DataFrame]:
-    """MinHash banding: equal band-slice => candidate.
-
-    -> (pairs(a, b, source='lsh'), dropped_buckets(band, key, sz))"""
-    keyed = signatures.select(
-        "conv_id",
-        F.posexplode(lsh_band_keys("minhash", cfg)).alias("band", "key"),
-    )
-    return _self_join_pairs(keyed, ["band", "key"], cfg.max_bucket_size, "lsh")
-
-
-def simhash_candidates(
-    signatures: DataFrame, cfg: SimHashConfig, max_bucket_size: int
-) -> tuple[DataFrame, DataFrame]:
-    """SimHash pigeonhole blocking: split the 64-bit fingerprint into
-    ``hamming_k + 1`` blocks; two docs within Hamming distance k agree
-    on at least one full block. Equi-join per block, then the exact
-    ``bit_count(xor) <= k`` theta post-filter."""
-    blocks = cfg.hamming_k + 1
-    width = cfg.bits // blocks
-    mask = (1 << width) - 1
-    keyed = signatures.select(
-        "conv_id",
-        F.col("simhash"),
-        F.posexplode(
-            F.array(
-                *[
-                    F.shiftrightunsigned(F.col("simhash"), i * width).bitwiseAND(
-                        F.lit(mask)
-                    )
-                    for i in range(blocks)
-                ]
-            )
-        ).alias("block", "key"),
-    )
-    sized = keyed.groupBy("block", "key").agg(
-        F.collect_list(F.struct("conv_id", "simhash")).alias("members"),
-        F.count("*").alias("sz"),
-    )
-    ok = sized.where(F.col("sz").between(2, max_bucket_size))
-    dropped = sized.where(F.col("sz") > max_bucket_size).select("block", "key", "sz")
-    m = F.array_sort("members")
-    pairs = (
-        ok.select(m.alias("m"))
-        .select(F.posexplode("m").alias("i", "l"), F.col("m"))
-        .select(
-            "l", F.explode(F.slice("m", F.col("i") + 2, F.size("m"))).alias("r")
-        )
-        .where(
-            F.bit_count(
-                F.col("l.simhash").bitwiseXOR(F.col("r.simhash"))
-            )
-            <= cfg.hamming_k
-        )
-        .select(
-            F.col("l.conv_id").alias("a"),
-            F.col("r.conv_id").alias("b"),
-        )
-        .distinct()
-        .withColumn("source", F.lit("simhash"))
-    )
-    return pairs, dropped
-
-
-def substring_candidates(
-    signatures: DataFrame, max_bucket_size: int
-) -> tuple[DataFrame, DataFrame]:
-    """Winnowed-anchor blocking for exact-substring duplicates: two docs
-    sharing any substring of >= window+gram-1 bytes share an anchor
-    (winnowing guarantee). Containment verification happens in the
-    verify stage (needs the doc text)."""
-    keyed = signatures.select(
-        "conv_id", F.explode("anchors").alias("key")
-    )
-    return _self_join_pairs(keyed, ["key"], max_bucket_size, "substring")
-
-
 def unified_candidates(
     signatures: DataFrame,
     lsh_cfg: LshConfig,
-    sim_cfg: SimHashConfig | None,
-    use_substring: bool,
+    sim_cfg: SimHashConfig,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """All three generators through ONE shuffle.
 
-    The per-generator implementations above each run their own
-    explode -> groupBy pipeline (three shuffles over the signature
-    table, ~3x the stage-scheduling overhead). At scale the bucket
-    grouping dominates the candidates stage, so this variant unions the
-    three key streams under a (gen, key1, key2) composite key and
-    groups ONCE; the SimHash Hamming post-filter is applied per-pair on
-    the carried fingerprints.
+    Each generator is an explode -> groupBy over the signature table;
+    run separately that is three shuffles (~3x the stage-scheduling
+    overhead), and at scale the bucket grouping dominates the
+    candidates stage. So the three key streams are unioned under a
+    (gen, key1, key2) composite key and grouped ONCE; the SimHash
+    Hamming post-filter is applied per-pair on the carried
+    fingerprints. The generator contracts:
+
+    * ``lsh``: some band's ``rows``-wide MinHash slice is equal;
+    * ``simhash``: the 64-bit fingerprints are within Hamming distance
+      ``hamming_k`` (pigeonhole blocking: ``hamming_k + 1`` blocks, two
+      such fingerprints agree on at least one full block);
+    * ``substring``: the docs share a winnowed anchor (any common
+      substring of >= window + gram - 1 bytes shares one).
 
     -> (candidates(a, b, sources), dropped(generator, sz), buckets)
 
@@ -198,48 +126,38 @@ def unified_candidates(
     # pair output untouched (conv_ids are unique within a bucket, so
     # simhash never tie-breaks the member sort).
     null_sim = F.lit(None).cast("long").alias("simhash")
-    gens = []
-    base = signatures.select(
+    lsh_keys = signatures.select(
         "conv_id",
         F.posexplode(lsh_band_keys("minhash", lsh_cfg)).alias("k1", "k2"),
     ).select("conv_id", null_sim, F.lit(0).alias("g"), "k1", "k2")
-    gens.append(base)
-    if sim_cfg is not None:
-        blocks = sim_cfg.hamming_k + 1
-        width = sim_cfg.bits // blocks
-        mask = (1 << width) - 1
-        gens.append(
-            signatures.select(
-                "conv_id", F.col("simhash"),
-                F.posexplode(
-                    F.array(
-                        *[
-                            F.shiftrightunsigned(
-                                F.col("simhash"), i * width
-                            ).bitwiseAND(F.lit(mask)).cast("int")
-                            for i in range(blocks)
-                        ]
-                    )
-                ).alias("k1", "simk"),
-            ).select(
-                "conv_id", "simhash", F.lit(1).alias("g"),
-                "k1", F.col("simk").cast("int").alias("k2"),
+    blocks = sim_cfg.hamming_k + 1
+    width = sim_cfg.bits // blocks
+    block_mask = (1 << width) - 1
+    sim_keys = signatures.select(
+        "conv_id", F.col("simhash"),
+        F.posexplode(
+            F.array(
+                *[
+                    F.shiftrightunsigned(
+                        F.col("simhash"), i * width
+                    ).bitwiseAND(F.lit(block_mask)).cast("int")
+                    for i in range(blocks)
+                ]
             )
-        )
-    if use_substring:
-        gens.append(
-            signatures.select(
-                "conv_id",
-                F.explode("anchors").alias("anchor"),
-            ).select(
-                "conv_id", null_sim, F.lit(2).alias("g"),
-                F.lit(0).alias("k1"),
-                F.hash("anchor").alias("k2"),
-            )
-        )
-    keyed = gens[0]
-    for g_df in gens[1:]:
-        keyed = keyed.unionByName(g_df)
+        ).alias("k1", "simk"),
+    ).select(
+        "conv_id", "simhash", F.lit(1).alias("g"),
+        "k1", F.col("simk").cast("int").alias("k2"),
+    )
+    anchor_keys = signatures.select(
+        "conv_id",
+        F.explode("anchors").alias("anchor"),
+    ).select(
+        "conv_id", null_sim, F.lit(2).alias("g"),
+        F.lit(0).alias("k1"),
+        F.hash("anchor").alias("k2"),
+    )
+    keyed = lsh_keys.unionByName(sim_keys).unionByName(anchor_keys)
 
     sized = keyed.groupBy("g", "k1", "k2").agg(
         F.collect_list(F.struct("conv_id", "simhash")).alias("members"),
@@ -259,7 +177,7 @@ def unified_candidates(
         "sz",
     )
     m = F.array_sort("members")
-    hamming_k = sim_cfg.hamming_k if sim_cfg is not None else 0
+    hamming_k = sim_cfg.hamming_k
 
     # Enumerate each bucket's pairs ENTIRELY array-side (nested
     # transform/filter higher-order functions), so only pairs that pass

@@ -273,10 +273,7 @@ class DedupPipeline:
     def stage_candidates(self, spark: SparkSession) -> None:
         sigs = self.catalog.read(spark, T_SIGN)
         cand, dropped, buckets = lsh_ops.unified_candidates(
-            sigs,
-            self.cfg.lsh,
-            self.cfg.simhash if self.cfg.use_simhash else None,
-            self.cfg.use_substring,
+            sigs, self.cfg.lsh, self.cfg.simhash
         )
         # the candidates and dropped-buckets writes are two actions over
         # the same grouped bucket table; persist it so the big
@@ -285,15 +282,13 @@ class DedupPipeline:
         metric_cols = {
             "n_candidates": F.count(F.lit(1)),
             "n_candidates_lsh": _count_if(F.array_contains("sources", "lsh")),
-        }
-        if self.cfg.use_simhash:
-            metric_cols["n_candidates_simhash"] = _count_if(
+            "n_candidates_simhash": _count_if(
                 F.array_contains("sources", "simhash")
-            )
-        if self.cfg.use_substring:
-            metric_cols["n_candidates_substring"] = _count_if(
+            ),
+            "n_candidates_substring": _count_if(
                 F.array_contains("sources", "substring")
-            )
+            ),
+        }
         try:
             # materialize the shared bucket cache once, then run the two
             # independent checkpoint writes as CONCURRENT jobs (guide

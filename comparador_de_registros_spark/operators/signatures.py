@@ -158,12 +158,11 @@ def batch_signatures(
     sh_cfg, sub_cfg = cfg.shingle, cfg.substring
     k = sh_cfg.k
     sim_seed = cfg.simhash.seed
-    use_sub = cfg.use_substring
     n = len(texts)
     enc = [t.encode("utf-8") for t in texts]
     lens = np.fromiter((len(e) for e in enc), dtype=np.int64, count=n)
-    pad = (max(k, sub_cfg.gram) if use_sub else k) - 1
-    pad = max(pad, 1)  # >= 1 NUL so token runs can't straddle docs
+    # >= 1 NUL so token runs can't straddle docs (k = gram = 1 gives 0)
+    pad = max(max(k, sub_cfg.gram) - 1, 1)
     buf = (b"\x00" * pad).join(enc)
     off = np.zeros(n, dtype=np.int64)
     if n > 1:
@@ -284,38 +283,34 @@ def batch_signatures(
             sim[tnz] = packed.reshape(-1).view(np.uint64).view(np.int64)
 
     # --- winnowed substring anchors ---------------------------------------
-    if use_sub:
-        gram, window = sub_cfg.gram, sub_cfg.window
-        grams_g = H.windows_from_prefix(prefix, gram, sub_cfg.seed)
-        cnt_g = np.where(
-            lens >= sub_cfg.min_doc_len, np.maximum(lens - gram + 1, 0), 0
-        )
-        gvals, _ = _segment_gather(grams_g, off, cnt_g)
-        gstarts = np.zeros(n, dtype=np.int64)
-        np.cumsum(cnt_g[:-1], out=gstarts[1:])
-        # big segments: one global O(n) sliding-min scan, window starts
-        # selected by position so runs never straddle a document
-        w_cnt = np.where(cnt_g >= window, cnt_g - window + 1, 0)
-        sm = _sliding_min(gvals, window)
-        avals, adocs = _segment_gather(sm, gstarts, w_cnt)
-        # small segments (0 < cnt < window): single min over the segment
-        small = (cnt_g > 0) & (cnt_g < window)
-        if small.any():
-            nzg = cnt_g > 0
-            seg_mins = np.minimum.reduceat(gvals, gstarts[nzg])
-            sel = small[nzg]
-            avals = np.concatenate([avals, seg_mins[sel]])
-            adocs = np.concatenate([adocs, np.flatnonzero(nzg)[sel]])
-            aorder = np.lexsort((avals, adocs))
-            avals, adocs = avals[aorder], adocs[aorder]
-        else:
-            _sort_segments(avals, w_cnt)
-        ua, ud = _dedupe_sorted(avals, adocs)
-        a_cnt = np.bincount(ud, minlength=n)
-        anchors = _split_to_lists(ua.astype(np.int64), a_cnt)
+    gram, window = sub_cfg.gram, sub_cfg.window
+    grams_g = H.windows_from_prefix(prefix, gram, sub_cfg.seed)
+    cnt_g = np.where(
+        lens >= sub_cfg.min_doc_len, np.maximum(lens - gram + 1, 0), 0
+    )
+    gvals, _ = _segment_gather(grams_g, off, cnt_g)
+    gstarts = np.zeros(n, dtype=np.int64)
+    np.cumsum(cnt_g[:-1], out=gstarts[1:])
+    # big segments: one global O(n) sliding-min scan, window starts
+    # selected by position so runs never straddle a document
+    w_cnt = np.where(cnt_g >= window, cnt_g - window + 1, 0)
+    sm = _sliding_min(gvals, window)
+    avals, adocs = _segment_gather(sm, gstarts, w_cnt)
+    # small segments (0 < cnt < window): single min over the segment
+    small = (cnt_g > 0) & (cnt_g < window)
+    if small.any():
+        nzg = cnt_g > 0
+        seg_mins = np.minimum.reduceat(gvals, gstarts[nzg])
+        sel = small[nzg]
+        avals = np.concatenate([avals, seg_mins[sel]])
+        adocs = np.concatenate([adocs, np.flatnonzero(nzg)[sel]])
+        aorder = np.lexsort((avals, adocs))
+        avals, adocs = avals[aorder], adocs[aorder]
     else:
-        empty = np.empty(0, dtype=np.int64)
-        anchors = [empty] * n
+        _sort_segments(avals, w_cnt)
+    ua, ud = _dedupe_sorted(avals, adocs)
+    a_cnt = np.bincount(ud, minlength=n)
+    anchors = _split_to_lists(ua.astype(np.int64), a_cnt)
 
     return {
         "n_shingles": n_sh.astype(np.int32),

@@ -205,15 +205,16 @@ def verify_pairs(
         #    sig-table exchanges total instead of 2 full ones; the
         #    unavoidable per-pair cost is the sh_a array riding join 2's
         #    pair-keyed exchange once.
-        ids = candidates.select(
-            F.explode(F.array("a", "b")).alias("conv_id")
-        ).distinct()
-        if cfg.broadcast_participants:
-            # static broadcast: an AQE-converted broadcast arrives AFTER
-            # the sig exchange was submitted (both sides scheduled in
-            # parallel), leaving the filter post-shuffle where it saves
-            # nothing (measured at 600k base)
-            ids = F.broadcast(ids)
+        # The participant id set is broadcast STATICALLY (measured: a
+        # 27% byte cut at 150k base): an AQE-converted broadcast arrives
+        # AFTER the sig exchange was submitted (both sides scheduled in
+        # parallel), leaving the filter post-shuffle where it saves
+        # nothing (measured at 600k base).
+        ids = F.broadcast(
+            candidates.select(
+                F.explode(F.array("a", "b")).alias("conv_id")
+            ).distinct()
+        )
         sigp = (
             signatures.select("conv_id", "shingles")
             .join(ids, "conv_id", "left_semi")
@@ -317,131 +318,126 @@ def verify_pairs(
         .withColumn("overlap", F.lit(False))
     )
 
-    if cfg.use_substring:
-        # same shared-exchange shape as the shingle joins: the ladder
-        # residue is a small pair set, so the participant semi-join
-        # prunes the docs table hard before its single norm exchange
-        # the residue id set is BROADCAST explicitly: Spark's size
-        # estimate for a distinct over the cached scored table is
-        # unknown, so without the hint AQE plans an SMJ semi and the
-        # full docs norm column crosses an exchange before the runtime
-        # size is known (measured: 139 MB at 150k base for a ~1 MB id
-        # set). The residue is structurally small — substring-sourced
-        # candidates that FAILED Jaccard, bounded by the anchor
-        # generator's bucket caps — and if it ever outgrew Spark's
-        # broadcast limit the job fails loudly rather than silently.
-        if small or broadcast_sigs:
-            # Small/medium plans: seed the semi-join with the CANDIDATE
-            # participants instead of the ladder residue's. The id set
-            # is a superset (residue pairs are candidates), and the
-            # with_norms joins below are inner on the residue's a/b, so
-            # extra d rows are never matched — output identical. What it
-            # buys: the residue ids depend on the scored branch, so the
-            # ids -> d broadcast builds were NESTED under scored's and
-            # the three broadcasts serialized (profiled: three ~1.1 s
-            # jobs back-to-back at bench scale); candidate ids depend
-            # only on the (cached/checkpointed) pair table, letting the
-            # norm broadcast build in parallel with scored. Byte bound
-            # unchanged in the worst case (the residue can BE the whole
-            # candidate set); on the medium plan participant norms are
-            # ~1/4 of the shingle broadcast the byte gate already
-            # priced. The large plan keeps residue-derived ids — at
-            # scale the superset would broadcast norms for millions of
-            # participants whose pairs never reach the ladder.
-            if ids_cached is not None:
-                ids_sub = F.broadcast(ids_cached)
-            else:
-                ids_sub = F.broadcast(
-                    candidates.select(
-                        F.explode(F.array("a", "b")).alias("conv_id")
-                    ).distinct()
-                )
+    # same shared-exchange shape as the shingle joins: the ladder
+    # residue is a small pair set, so the participant semi-join
+    # prunes the docs table hard before its single norm exchange
+    # the residue id set is BROADCAST explicitly: Spark's size
+    # estimate for a distinct over the cached scored table is
+    # unknown, so without the hint AQE plans an SMJ semi and the
+    # full docs norm column crosses an exchange before the runtime
+    # size is known (measured: 139 MB at 150k base for a ~1 MB id
+    # set). The residue is structurally small — substring-sourced
+    # candidates that FAILED Jaccard, bounded by the anchor
+    # generator's bucket caps — and if it ever outgrew Spark's
+    # broadcast limit the job fails loudly rather than silently.
+    if small or broadcast_sigs:
+        # Small/medium plans: seed the semi-join with the CANDIDATE
+        # participants instead of the ladder residue's. The id set
+        # is a superset (residue pairs are candidates), and the
+        # with_norms joins below are inner on the residue's a/b, so
+        # extra d rows are never matched — output identical. What it
+        # buys: the residue ids depend on the scored branch, so the
+        # ids -> d broadcast builds were NESTED under scored's and
+        # the three broadcasts serialized (profiled: three ~1.1 s
+        # jobs back-to-back at bench scale); candidate ids depend
+        # only on the (cached/checkpointed) pair table, letting the
+        # norm broadcast build in parallel with scored. Byte bound
+        # unchanged in the worst case (the residue can BE the whole
+        # candidate set); on the medium plan participant norms are
+        # ~1/4 of the shingle broadcast the byte gate already
+        # priced. The large plan keeps residue-derived ids — at
+        # scale the superset would broadcast norms for millions of
+        # participants whose pairs never reach the ladder.
+        if ids_cached is not None:
+            ids_sub = F.broadcast(ids_cached)
         else:
             ids_sub = F.broadcast(
-                needs_substring.select(
+                candidates.select(
                     F.explode(F.array("a", "b")).alias("conv_id")
                 ).distinct()
             )
-        # persisted: the norm_a and norm_b joins both consume d, and
-        # physical planning duplicates the subtree (the two filtered
-        # exchanges don't canonicalize equal under the broadcast semi),
-        # which re-scans docs and writes the exchange twice. The cache
-        # is small by the same residue-size argument; released with the
-        # scored cache via release_scored.
-        d = docs_norm.select("conv_id", "norm").join(
-            ids_sub, "conv_id", "left_semi"
-        )
-        if not (small or broadcast_sigs):
-            # large plan only: spread the residue norms for the
-            # exchange-based joins below; on the small/medium plans d is
-            # broadcast and the extra exchange is pure fixed cost
-            d = d.repartition(n_part, "conv_id")
-        d = d.persist()
-        # On the small/medium plans the corpus itself fits a broadcast,
-        # so the residue norms certainly do: broadcasting d turns the
-        # two norm joins into BHJs with zero exchanges/sorts over the
-        # residue (several fixed stages saved per run at query scale).
-        # The large plan keeps the exchange shape — there the residue
-        # norm BYTES (full doc texts) may exceed broadcast limits even
-        # when the pair count is modest.
-        d_side = F.broadcast(d) if (small or broadcast_sigs) else d
-        with_norms = (
-            needs_substring.join(
-                d_side.select(F.col("conv_id").alias("a"), "norm"), "a"
-            )
-            .withColumnRenamed("norm", "norm_a")
-            .join(d_side.select(F.col("conv_id").alias("b"), "norm"), "b")
-            .withColumnRenamed("norm", "norm_b")
-        )
-        if not (small or broadcast_sigs):
-            # EXPLICIT spread before the LCS UDF — LARGE plan only: the
-            # residue is small relative to the corpus, so AQE coalesces
-            # the join output to 1-2 partitions and the per-pair
-            # rolling-hash kernel runs as a SERIAL tail — a fixed cost
-            # that hits every cluster size equally and caps scaling
-            # efficiency (measured: ~20s of the 1->4 executor fixed
-            # cost at 10M turns). An explicit count is
-            # AQE-coalescing-exempt. On the small/medium (broadcast)
-            # plans the residue is tiny and the extra exchange is pure
-            # fixed cost.
-            with_norms = with_norms.repartition(n_part, "a", "b")
-        with_norms = (
-            with_norms
-            .withColumn(
-                "contained",
-                F.when(
-                    F.length("norm_a") <= F.length("norm_b"),
-                    F.instr(F.col("norm_b"), F.col("norm_a")) > 0,
-                ).otherwise(F.instr(F.col("norm_a"), F.col("norm_b")) > 0),
-            )
-            # overlap decision only where containment already failed;
-            # byte-length pre-filter: LCS >= min_overlap needs both docs
-            # that long (native, prunes the UDF input further)
-            .withColumn(
-                "overlap",
-                F.when(F.col("contained"), F.lit(False)).otherwise(
-                    (F.length("norm_a") >= cfg.substring.min_overlap)
-                    & (F.length("norm_b") >= cfg.substring.min_overlap)
-                    & _overlap_udf(
-                        F.col("norm_a"),
-                        F.col("norm_b"),
-                        cfg.substring.min_overlap,
-                    )
-                ),
-            )
-            .select("a", "b", "sources", "jaccard", "contained", "overlap")
-            # persisted: the ladder branch (joins + the per-pair LCS
-            # kernel) is consumed by every downstream action on the
-            # verified union — without a cache each count/write re-runs
-            # it. The table is residue-sized (same smallness argument
-            # as d); released via release_scored.
-            .persist()
-        )
-        verified = no_ladder.unionByName(with_norms)
     else:
-        d = None
-        with_norms = None
-        verified = no_ladder
+        ids_sub = F.broadcast(
+            needs_substring.select(
+                F.explode(F.array("a", "b")).alias("conv_id")
+            ).distinct()
+        )
+    # persisted: the norm_a and norm_b joins both consume d, and
+    # physical planning duplicates the subtree (the two filtered
+    # exchanges don't canonicalize equal under the broadcast semi),
+    # which re-scans docs and writes the exchange twice. The cache
+    # is small by the same residue-size argument; released with the
+    # scored cache via release_scored.
+    d = docs_norm.select("conv_id", "norm").join(
+        ids_sub, "conv_id", "left_semi"
+    )
+    if not (small or broadcast_sigs):
+        # large plan only: spread the residue norms for the
+        # exchange-based joins below; on the small/medium plans d is
+        # broadcast and the extra exchange is pure fixed cost
+        d = d.repartition(n_part, "conv_id")
+    d = d.persist()
+    # On the small/medium plans the corpus itself fits a broadcast,
+    # so the residue norms certainly do: broadcasting d turns the
+    # two norm joins into BHJs with zero exchanges/sorts over the
+    # residue (several fixed stages saved per run at query scale).
+    # The large plan keeps the exchange shape — there the residue
+    # norm BYTES (full doc texts) may exceed broadcast limits even
+    # when the pair count is modest.
+    d_side = F.broadcast(d) if (small or broadcast_sigs) else d
+    with_norms = (
+        needs_substring.join(
+            d_side.select(F.col("conv_id").alias("a"), "norm"), "a"
+        )
+        .withColumnRenamed("norm", "norm_a")
+        .join(d_side.select(F.col("conv_id").alias("b"), "norm"), "b")
+        .withColumnRenamed("norm", "norm_b")
+    )
+    if not (small or broadcast_sigs):
+        # EXPLICIT spread before the LCS UDF — LARGE plan only: the
+        # residue is small relative to the corpus, so AQE coalesces
+        # the join output to 1-2 partitions and the per-pair
+        # rolling-hash kernel runs as a SERIAL tail — a fixed cost
+        # that hits every cluster size equally and caps scaling
+        # efficiency (measured: ~20s of the 1->4 executor fixed
+        # cost at 10M turns). An explicit count is
+        # AQE-coalescing-exempt. On the small/medium (broadcast)
+        # plans the residue is tiny and the extra exchange is pure
+        # fixed cost.
+        with_norms = with_norms.repartition(n_part, "a", "b")
+    with_norms = (
+        with_norms
+        .withColumn(
+            "contained",
+            F.when(
+                F.length("norm_a") <= F.length("norm_b"),
+                F.instr(F.col("norm_b"), F.col("norm_a")) > 0,
+            ).otherwise(F.instr(F.col("norm_a"), F.col("norm_b")) > 0),
+        )
+        # overlap decision only where containment already failed;
+        # byte-length pre-filter: LCS >= min_overlap needs both docs
+        # that long (native, prunes the UDF input further)
+        .withColumn(
+            "overlap",
+            F.when(F.col("contained"), F.lit(False)).otherwise(
+                (F.length("norm_a") >= cfg.substring.min_overlap)
+                & (F.length("norm_b") >= cfg.substring.min_overlap)
+                & _overlap_udf(
+                    F.col("norm_a"),
+                    F.col("norm_b"),
+                    cfg.substring.min_overlap,
+                )
+            ),
+        )
+        .select("a", "b", "sources", "jaccard", "contained", "overlap")
+        # persisted: the ladder branch (joins + the per-pair LCS
+        # kernel) is consumed by every downstream action on the
+        # verified union — without a cache each count/write re-runs
+        # it. The table is residue-sized (same smallness argument
+        # as d); released via release_scored.
+        .persist()
+    )
+    verified = no_ladder.unionByName(with_norms)
 
     out = verified.withColumn(
         "is_dup",
@@ -453,8 +449,8 @@ def verify_pairs(
         | F.col("overlap"),
     )
     out._cdr_scored = scored
-    out._cdr_dnorm = d if cfg.use_substring else None
-    out._cdr_ladder = with_norms if cfg.use_substring else None
+    out._cdr_dnorm = d
+    out._cdr_ladder = with_norms
     out._cdr_ids = ids_cached
     return out
 

@@ -20,11 +20,9 @@ from dataclasses import dataclass, field
 
 @dataclass(frozen=True)
 class ShingleConfig:
-    """Document -> shingle-set config. ``kind='char'`` hashes utf-8 byte
-    k-grams of the normalized text (robust to token-level edits);
-    ``kind='word'`` hashes k-token windows."""
+    """Document -> shingle-set config: utf-8 byte k-grams of the
+    normalized text (robust to token-level edits)."""
 
-    kind: str = "char"
     # 12-byte char grams: small enough that 1-2 token edits keep J >= 0.9
     # on real-length conversations, large enough that reordering turns
     # (boundary-crossing grams rewritten) lands clearly under the 0.8
@@ -33,8 +31,6 @@ class ShingleConfig:
     seed: int = 0x5EED_5EED
 
     def __post_init__(self) -> None:
-        if self.kind not in ("char", "word"):
-            raise ValueError(f"unknown shingle kind {self.kind!r}")
         if self.k < 1:
             raise ValueError("k must be >= 1")
 
@@ -111,24 +107,12 @@ class DedupConfig:
     simhash: SimHashConfig = field(default_factory=SimHashConfig)
     substring: SubstringConfig = field(default_factory=SubstringConfig)
     jaccard_threshold: float = 0.8
-    use_simhash: bool = True
-    use_substring: bool = True
     # assemble-shuffle skew guard: cap turns per conversation (first
     # max_turns in turn_idx order; truncations are flagged + counted in
     # the stage metrics, never silent). 10k turns * ~120 B/turn keeps
     # the worst aggregation task ~MBs; raise for corpora with genuinely
     # long conversations.
     max_turns_per_conv: int | None = 10_000
-    # Verify-stage participant filter: the candidate-pair id set is
-    # broadcast into a semi-join that prunes the signature table BEFORE
-    # its single shared exchange, so only conversations that appear in
-    # >= 1 pair ship their shingle arrays (measured: 27% byte cut at
-    # 150k base, and the filter must be STATIC — AQE's broadcast
-    # conversion arrives after the exchange is already submitted).
-    # Flip off when the distinct participant count outgrows what the
-    # driver can broadcast (~100M int64 ids); the fallback keeps the
-    # same single-exchange structure, just filtered post-shuffle.
-    broadcast_participants: bool = True
 
     # verify-stage plan split point: when the caller KNOWS the candidate
     # pair count (e.g. signature_dup_pairs materializes its candidate

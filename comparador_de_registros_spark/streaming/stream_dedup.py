@@ -155,6 +155,7 @@ class StreamingDedup:
         new = docs.select(
             "conv_id", "doc", normalize_doc_col(F.col("doc")).alias("norm")
         ).persist()
+        sigs_new = None
         try:
             if new.isEmpty():
                 return
@@ -178,8 +179,11 @@ class StreamingDedup:
             self._write_batch(
                 new.select("conv_id", "norm"), "docs_norm", batch_id
             )
-            sigs_new.unpersist()
         finally:
+            # a failing verify or write must not leave the batch's
+            # signature cache pinned for the rest of the session
+            if sigs_new is not None:
+                sigs_new.unpersist()
             new.unpersist()
 
     def start(

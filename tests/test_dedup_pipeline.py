@@ -334,6 +334,100 @@ def test_lsh_candidates_near_linear(spark, pipeline_result):
     assert n_cand <= 5 * n_docs, (n_cand, n_docs)
 
 
+def _generator_fixture_docs() -> dict[str, str]:
+    """~30 normalized docs exercising each candidate generator."""
+    import random
+
+    rng = random.Random(7)
+    vocab = [f"w{i:03d}" for i in range(400)]
+
+    def words(n: int) -> str:
+        return " ".join(rng.choice(vocab) for _ in range(n))
+
+    docs = {}
+    # near-dups: 1-2 token edits of a 90-token doc
+    for i in range(6):
+        base = words(90).split()
+        docs[f"base{i}"] = " ".join(base)
+        if i < 4:
+            edit = list(base)
+            for _ in range(i % 2 + 1):
+                edit[rng.randrange(len(edit))] = rng.choice(vocab)
+            docs[f"near{i}"] = " ".join(edit)
+    # template docs: one token multiset, reordered (char grams and so
+    # the MinHash bands differ) with 0-2 tokens replaced, which puts
+    # the SimHashes a few bits apart, on both sides of hamming_k
+    short = [a + b for a in "abcdefghij" for b in "0123456789"]
+    tmpl = rng.sample(short, 60)
+    for i in range(10):
+        toks = list(tmpl)
+        for _ in range(i // 4):
+            toks[rng.randrange(len(toks))] = rng.choice(short)
+        rng.shuffle(toks)
+        docs[f"tmpl{i}"] = " ".join(toks)
+    # unrelated docs sharing a >= 200-byte passage
+    for i in range(3):
+        shared = words(50)
+        docs[f"subA{i}"] = f"{words(30)} {shared} {words(40)}"
+        docs[f"subB{i}"] = f"{words(45)} {shared} {words(20)}"
+    return docs
+
+
+def test_unified_candidates_matches_reference(spark):
+    """unified_candidates returns exactly the pairs each generator's
+    contract admits, with exactly the sources that admit them:
+    lsh = some band's rows-wide MinHash slice is equal, simhash =
+    Hamming distance <= hamming_k, substring = a shared anchor."""
+    import itertools
+
+    from comparador_de_registros_spark.operators.lsh import unified_candidates
+    from comparador_de_registros_spark.operators.signatures import (
+        compute_signatures,
+    )
+
+    cfg = DedupConfig()
+    docs = spark.createDataFrame(
+        sorted(_generator_fixture_docs().items()), "conv_id string, norm string"
+    )
+    sigs = compute_signatures(docs, cfg).persist()
+    try:
+        rows = sorted(sigs.collect(), key=lambda r: r["conv_id"])
+        cand, _, _ = unified_candidates(sigs, cfg.lsh, cfg.simhash)
+        got = {(r["a"], r["b"], tuple(r["sources"])) for r in cand.collect()}
+    finally:
+        sigs.unpersist()
+
+    r_ = cfg.lsh.rows
+    expected = set()
+    hamming = {}
+    for x, y in itertools.combinations(rows, 2):
+        mx, my = x["minhash"], y["minhash"]
+        dist = bin((x["simhash"] ^ y["simhash"]) & (2**64 - 1)).count("1")
+        hamming[(x["conv_id"], y["conv_id"])] = dist
+        sources = []
+        if any(
+            mx[i * r_ : (i + 1) * r_] == my[i * r_ : (i + 1) * r_]
+            for i in range(cfg.lsh.bands)
+        ):
+            sources.append("lsh")
+        if dist <= cfg.simhash.hamming_k:
+            sources.append("simhash")
+        if set(x["anchors"]) & set(y["anchors"]):
+            sources.append("substring")
+        if sources:
+            expected.add((x["conv_id"], y["conv_id"], tuple(sources)))
+    assert got == expected, (got - expected, expected - got)
+
+    # the fixture reaches every contract on its own and both sides of
+    # the Hamming bound
+    only = {s[0] for _, _, s in expected if len(s) == 1}
+    assert {"simhash", "substring"} <= only, expected
+    assert any(s[0] == "lsh" for _, _, s in expected)
+    k = cfg.simhash.hamming_k
+    tmpl_d = {d for (a, b), d in hamming.items() if a[:4] == b[:4] == "tmpl"}
+    assert tmpl_d & set(range(1, k + 1)) and tmpl_d & {k + 1, k + 2}, tmpl_d
+
+
 def test_batch_kernel_matches_per_doc():
     """The vectorized cross-document kernel must be bit-for-bit equal to
     the per-doc primitives (char_shingles / minhash_signature /
@@ -539,3 +633,39 @@ def test_verify_stage_fails_on_unaccounted_candidates(
         # the stage releases the lossy frame, not the caches under it
         release_scored(made[0])
     assert not catalog.exists("verified")
+
+
+def _released(df) -> bool:
+    level = df.storageLevel
+    return not (level.useMemory or level.useDisk)
+
+
+def test_signature_dup_pairs_releases_caches_when_verify_fails(
+    spark, monkeypatch
+):
+    """A verify that raises leaves the caller no frame to pass to
+    release_signature_run, so signature_dup_pairs itself must drop the
+    signature and candidate caches it persisted."""
+    from comparador_de_registros_spark.operators import doc_dedup
+
+    made = {}
+    real_sign = doc_dedup.compute_signatures
+
+    def sign(*args, **kwargs):
+        made["sigs"] = real_sign(*args, **kwargs)
+        return made["sigs"]
+
+    def failing_verify(cand, *args, **kwargs):
+        made["cand"] = cand
+        raise RuntimeError("verify failed")
+
+    monkeypatch.setattr(doc_dedup, "compute_signatures", sign)
+    monkeypatch.setattr(doc_dedup, "verify_pairs", failing_verify)
+    text = "the quick brown fox jumps over the lazy dog " * 4
+    docs = spark.createDataFrame(
+        [(1, text), (2, text)], "doc_id long, text string"
+    )
+    with pytest.raises(RuntimeError, match="verify failed"):
+        doc_dedup.signature_dup_pairs(docs, DedupConfig())
+    assert _released(made["sigs"])
+    assert _released(made["cand"])

@@ -12,7 +12,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from comparador_de_registros_spark.operators import doc_dedup
-from comparador_de_registros_spark.operators.lsh import unified_candidates
 from comparador_de_registros_spark.operators.verify import (
     release_scored,
     verify_pairs,

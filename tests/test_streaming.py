@@ -167,6 +167,34 @@ def test_restart_replay_is_idempotent(spark, tmp_path):
     assert snapshot() == before
 
 
+def test_failed_batch_releases_signature_cache(spark, tmp_path, monkeypatch):
+    """A batch whose verify raises must not leave its signature cache
+    pinned for the rest of the session."""
+    from comparador_de_registros_spark.streaming import stream_dedup
+
+    made = {}
+    real_sign = stream_dedup.compute_signatures
+
+    def sign(*args, **kwargs):
+        made["sigs"] = real_sign(*args, **kwargs)
+        return made["sigs"]
+
+    def failing_verify(*args, **kwargs):
+        raise RuntimeError("verify failed")
+
+    monkeypatch.setattr(stream_dedup, "compute_signatures", sign)
+    monkeypatch.setattr(stream_dedup, "verify_pairs", failing_verify)
+    docs = spark.createDataFrame(
+        [("c1", "hello there"), ("c2", "general kenobi")],
+        "conv_id string, doc string",
+    )
+    sd = StreamingDedup(workdir=str(tmp_path / "work"), cfg=DedupConfig())
+    with pytest.raises(RuntimeError, match="verify failed"):
+        sd.process_batch(docs, 0)
+    level = made["sigs"].storageLevel
+    assert not (level.useMemory or level.useDisk)
+
+
 def test_legacy_state_layout_fails_loudly(spark, tmp_path):
     """A pre-round-3 workdir (flat parquet files with a batch_id DATA
     column at the table root) must raise a migration error on restart —
