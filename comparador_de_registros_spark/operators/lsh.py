@@ -100,6 +100,17 @@ def unified_candidates(
 
     -> (candidates(a, b, sources), dropped(generator, sz), buckets)
 
+    **Delta form.** When ``signatures`` carries a boolean ``is_new``
+    column (state rows False, the arriving batch True), only the
+    buckets that hold at least one new doc are grouped, and only pairs
+    with at least one new member are enumerated; the pairs between two
+    old docs were found when the later of them arrived. Such a bucket
+    keeps its old members, so the ``max_bucket_size`` cap applies to
+    the whole bucket exactly as in the batch form, and a pair's
+    ``sources`` are the generators whose buckets hold both docs. A
+    conv_id present on both sides (a session window can emit one twice)
+    never pairs with itself: ``a < b`` strictly.
+
     ``buckets`` is the grouped bucket table BOTH outputs project from.
     The two outputs are separate actions at the caller (two table
     writes), and their filters push down differently, so WITHOUT help
@@ -126,15 +137,17 @@ def unified_candidates(
     # pair output untouched (conv_ids are unique within a bucket, so
     # simhash never tie-breaks the member sort).
     null_sim = F.lit(None).cast("long").alias("simhash")
+    carry = ["is_new"] if "is_new" in signatures.columns else []
     lsh_keys = signatures.select(
         "conv_id",
+        *carry,
         F.posexplode(lsh_band_keys("minhash", lsh_cfg)).alias("k1", "k2"),
-    ).select("conv_id", null_sim, F.lit(0).alias("g"), "k1", "k2")
+    ).select("conv_id", null_sim, F.lit(0).alias("g"), "k1", "k2", *carry)
     blocks = sim_cfg.hamming_k + 1
     width = sim_cfg.bits // blocks
     block_mask = (1 << width) - 1
     sim_keys = signatures.select(
-        "conv_id", F.col("simhash"),
+        "conv_id", F.col("simhash"), *carry,
         F.posexplode(
             F.array(
                 *[
@@ -147,20 +160,33 @@ def unified_candidates(
         ).alias("k1", "simk"),
     ).select(
         "conv_id", "simhash", F.lit(1).alias("g"),
-        "k1", F.col("simk").cast("int").alias("k2"),
+        "k1", F.col("simk").cast("int").alias("k2"), *carry,
     )
     anchor_keys = signatures.select(
         "conv_id",
+        *carry,
         F.explode("anchors").alias("anchor"),
     ).select(
         "conv_id", null_sim, F.lit(2).alias("g"),
         F.lit(0).alias("k1"),
         F.hash("anchor").alias("k2"),
+        *carry,
     )
     keyed = lsh_keys.unionByName(sim_keys).unionByName(anchor_keys)
+    if carry:
+        # delta form: keep the buckets the batch touches, old members
+        # included. No broadcast hint: a large batch's keys need not
+        # fit one, and AQE converts the join when they do.
+        keyed = keyed.join(
+            keyed.where("is_new").select("g", "k1", "k2"),
+            ["g", "k1", "k2"],
+            "left_semi",
+        )
 
     sized = keyed.groupBy("g", "k1", "k2").agg(
-        F.collect_list(F.struct("conv_id", "simhash")).alias("members"),
+        F.collect_list(F.struct("conv_id", "simhash", *carry)).alias(
+            "members"
+        ),
         F.count("*").alias("sz"),
     )
     # both outputs only look at multi-member buckets; filtering BEFORE
@@ -195,10 +221,8 @@ def unified_candidates(
     # Hamming k.
     def _bucket_pairs(mcol):
         def inner(l, i):
-            keep = F.filter(
-                mcol,
-                lambda r, j: (j > i)
-                & (
+            def keep(r, j):
+                ok = (j > i) & (
                     (F.col("g") != F.lit(1))
                     | (
                         F.bit_count(
@@ -206,10 +230,18 @@ def unified_candidates(
                         )
                         <= hamming_k
                     )
-                ),
-            )
+                )
+                if carry:
+                    # members sort by conv_id, so != makes a < b strict
+                    ok = (
+                        ok
+                        & (l["conv_id"] != r["conv_id"])
+                        & (l["is_new"] | r["is_new"])
+                    )
+                return ok
+
             return F.transform(
-                keep,
+                F.filter(mcol, keep),
                 lambda r: F.struct(
                     l["conv_id"].alias("a"), r["conv_id"].alias("b")
                 ),

@@ -37,17 +37,6 @@ from pyspark.sql.functions import pandas_udf
 from comparador_de_registros_spark.plans.configs import DedupConfig
 
 
-def union_candidates(*pair_dfs: DataFrame) -> DataFrame:
-    """UNION the generator outputs, keeping the set of sources per pair."""
-    out = None
-    for df in pair_dfs:
-        out = df if out is None else out.unionByName(df)
-    return (
-        out.groupBy("a", "b")
-        .agg(F.array_sort(F.collect_set("source")).alias("sources"))
-    )
-
-
 _OVERLAP_UDFS: dict[int, object] = {}
 
 
@@ -88,7 +77,7 @@ def verify_pairs(
     signatures: DataFrame,
     docs_norm: DataFrame,
     cfg: DedupConfig,
-    n_candidates: int | None = None,
+    n_candidates: int,
 ) -> DataFrame:
     """-> (a, b, jaccard, contained, overlap, is_dup, sources)
 
@@ -103,27 +92,23 @@ def verify_pairs(
     proves rejected — their is_dup is exactly False and the expensive
     per-pair intersection is skipped.
 
-    ``n_candidates``: pass the known candidate-pair count (callers that
-    materialize the candidate table anyway) to let verify pick the
-    small-corpus plan below; ``None`` means unknown -> large-corpus
-    plan.
+    ``n_candidates`` is the candidate-pair count; it picks the plan
+    below (every caller knows it: the pipeline from its checkpoint
+    footers, the docs line and the stream from their materialized
+    candidate caches).
     """
     spark = candidates.sparkSession
     n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    small = (
-        n_candidates is not None
-        and n_candidates <= cfg.verify_small_candidates_max
-    )
+    small = n_candidates <= cfg.verify_small_candidates_max
     broadcast_sigs = False
     ids_cached = None
-    if not small and n_candidates is not None:
-        # Medium plan probe: when the pair count is known (the caller
-        # materialized the candidate cache) but too big to broadcast the
-        # pair side, the PARTICIPANT side may still be small enough to
-        # broadcast instead — one cheap distinct-count job over the
-        # cached pair table decides. Broadcasting the participant-
-        # filtered sig table removes every exchange over the (much
-        # larger) pair side: the fat shingle arrays never ride a
+    if not small:
+        # Medium plan probe: when the pair count is too big to
+        # broadcast the pair side, the PARTICIPANT side may still be
+        # small enough to broadcast instead — one cheap distinct-count
+        # job over the cached pair table decides. Broadcasting the
+        # participant-filtered sig table removes every exchange over
+        # the (much larger) pair side: the fat shingle arrays never ride a
         # pair-keyed shuffle and the 2 joins run as BHJ in the pairs'
         # existing partitioning (guide §3.1; measured at 50k docs /
         # 2.76M pairs: scored compute 15.3s shared-exchange -> 12.4s).

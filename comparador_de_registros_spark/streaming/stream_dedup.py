@@ -10,14 +10,23 @@ operators).
   (per-turn text equality invariant). Late turns beyond the watermark
   are dropped by Spark's state eviction — the documented trade against
   unbounded state at 10^12-turn scale.
-* :class:`StreamingDedup` — ``foreachBatch`` incremental dedup: each
-  micro-batch of closed conversations is signed (the same vectorized
-  kernel), banded against the ACCUMULATED signature store
-  (delta x corpus join, shuffle proportional to the batch —
-  streaming/incremental.py), verified (Jaccard / containment / LCS),
-  and appended to the verified-pairs and signature tables. State lives
-  in parquet tables + the streaming checkpoint, so the query restarts
+* :class:`StreamingDedup` — ``foreachBatch`` incremental dedup under
+  the batch line's rule: each micro-batch of closed conversations is
+  signed (the same vectorized kernel), its candidates come from
+  :func:`~comparador_de_registros_spark.operators.lsh.unified_candidates`
+  in delta form over the ACCUMULATED signature store (all three
+  generators — LSH bands, SimHash blocks, substring anchors; only the
+  buckets holding a new doc are grouped, the ``max_bucket_size`` cap
+  counts their old members too, and only pairs with a new member are
+  enumerated), the counted candidates are verified (Jaccard /
+  containment / LCS) on the plan their count selects, and the batch is
+  appended to the verified-pairs and signature tables. State lives in
+  parquet tables + the streaming checkpoint, so the query restarts
   exactly-once per batch id.
+
+  The streamed pairs equal the batch line's over the same docs, with
+  one documented exception: a bucket that only outgrows the cap in a
+  later batch has already yielded its pairs in the earlier ones.
 """
 
 from __future__ import annotations
@@ -29,19 +38,16 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from comparador_de_registros_spark.operators.assembly import normalize_doc_col
+from comparador_de_registros_spark.operators.lsh import unified_candidates
 from comparador_de_registros_spark.operators.signatures import (
     SIGNATURE_SCHEMA,
     compute_signatures,
 )
 from comparador_de_registros_spark.operators.verify import (
     release_scored,
-    union_candidates,
     verify_pairs,
 )
 from comparador_de_registros_spark.plans.configs import DedupConfig
-from comparador_de_registros_spark.streaming.incremental import (
-    incremental_candidates,
-)
 
 TURN_SEPARATOR = "\n"
 
@@ -155,7 +161,7 @@ class StreamingDedup:
         new = docs.select(
             "conv_id", "doc", normalize_doc_col(F.col("doc")).alias("norm")
         ).persist()
-        sigs_new = None
+        sigs_new = cand = None
         try:
             if new.isEmpty():
                 return
@@ -163,14 +169,23 @@ class StreamingDedup:
             corpus_sigs = self._read_state(
                 spark, "signatures", SIGNATURE_SCHEMA, batch_id
             )
-            cand = union_candidates(
-                incremental_candidates(sigs_new, corpus_sigs, self.cfg.lsh)
+            marked = corpus_sigs.withColumn(
+                "is_new", F.lit(False)
+            ).unionByName(sigs_new.withColumn("is_new", F.lit(True)))
+            cand, _, _ = unified_candidates(
+                marked, self.cfg.lsh, self.cfg.simhash
             )
+            # counted eagerly: the count picks verify's plan, and the
+            # cache keeps verify's consumers from re-running the grouping
+            cand = cand.persist()
+            n_cand = cand.count()
             all_sigs = corpus_sigs.unionByName(sigs_new)
             all_norms = self._read_state(
                 spark, "docs_norm", "conv_id string, norm string", batch_id
             ).unionByName(new.select("conv_id", "norm"))
-            verified = verify_pairs(cand, all_sigs, all_norms, self.cfg)
+            verified = verify_pairs(
+                cand, all_sigs, all_norms, self.cfg, n_candidates=n_cand
+            )
             try:
                 self._write_batch(verified, "verified", batch_id)
             finally:
@@ -181,9 +196,11 @@ class StreamingDedup:
             )
         finally:
             # a failing verify or write must not leave the batch's
-            # signature cache pinned for the rest of the session
-            if sigs_new is not None:
-                sigs_new.unpersist()
+            # signature or candidate cache pinned for the rest of the
+            # session
+            for cache in (cand, sigs_new):
+                if cache is not None:
+                    cache.unpersist()
             new.unpersist()
 
     def start(

@@ -75,6 +75,8 @@ def test_verify_shares_one_signature_exchange(spark):
     The executed plan must show a ReusedExchange over the shingle
     exchange instead of a second full exchange, and the participant
     semi-join must be a static broadcast (pre-exchange filtering)."""
+    import dataclasses
+
     from pyspark.sql import functions as F
 
     from comparador_de_registros_spark.operators.verify import (
@@ -95,7 +97,12 @@ def test_verify_shares_one_signature_exchange(spark):
         [(f"c{i}", f"text {i}") for i in range(300)],
         "conv_id string, norm string",
     )
-    out = verify_pairs(cand, sigs, docs, DedupConfig())
+    cfg = dataclasses.replace(
+        DedupConfig(),
+        verify_small_candidates_max=0,
+        verify_broadcast_sigs_max=0,  # force the shared-exchange plan
+    )
+    out = verify_pairs(cand, sigs, docs, cfg, n_candidates=100)
     try:
         out.where(F.col("is_dup")).count()
         plan = out._jdf.queryExecution().executedPlan().toString()

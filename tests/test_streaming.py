@@ -3,13 +3,18 @@ foreachBatch incremental dedup over file-source micro-batches."""
 
 from __future__ import annotations
 
+import dataclasses
 import os
 import time
 
 import pytest
 from pyspark.sql import functions as F
 
-from comparador_de_registros_spark.plans.configs import DedupConfig
+from comparador_de_registros_spark.operators import doc_dedup
+from comparador_de_registros_spark.operators.assembly import (
+    assemble_conversations,
+)
+from comparador_de_registros_spark.plans.configs import DedupConfig, LshConfig
 from comparador_de_registros_spark.sources import transcripts as tg
 from comparador_de_registros_spark.streaming.stream_dedup import (
     StreamingDedup,
@@ -89,7 +94,7 @@ def test_streaming_dedup_end_to_end(spark, stream_dirs):
     truth = {
         (r["a"], r["b"])
         for r in tg.truth_pairs(spark, SPEC).collect()
-        if r["kind"] in ("exact", "near")  # LSH-band incremental path
+        if r["kind"] in tg.DUP_KINDS
     }
     missed = truth - dups
     assert not missed, f"streaming dedup missed planted pairs: {missed}"
@@ -124,6 +129,121 @@ def test_assembled_doc_matches_batch_semantics(spark, stream_dirs):
         if cid == "__sentinel__":
             continue
         assert batch[cid] == norm, cid
+
+
+def _stream_rows(spark, workdir, batches, cfg):
+    """Stream ``batches`` in order -> sorted (a, b, sources, is_dup)."""
+    sd = StreamingDedup(workdir=workdir, cfg=cfg)
+    for batch_id, batch in enumerate(batches):
+        sd.process_batch(batch, batch_id)
+    ver = spark.read.parquet(f"{workdir}/verified")
+    return sorted(
+        (r["a"], r["b"], tuple(r["sources"]), r["is_dup"])
+        for r in ver.collect()
+    )
+
+
+def _batch_rows(docs, cfg):
+    """The docs line over the same docs -> sorted (a, b, sources, is_dup)."""
+    verified = doc_dedup.signature_dup_pairs(
+        docs, cfg, id_col="conv_id", text_col="doc"
+    )
+    try:
+        return sorted(
+            (r["a"], r["b"], tuple(r["sources"]), r["is_dup"])
+            for r in verified.collect()
+        )
+    finally:
+        doc_dedup.release_signature_run(verified)
+
+
+def test_stream_matches_batch_line(spark, tmp_path):
+    """Streamed over four batches, the verified rows equal the docs
+    line's rows over the same docs: same candidates from all three
+    generators, same sources, same verdicts. The dups of every planted
+    kind cross batch boundaries in both directions (dup before and
+    after its base), and the last batch copies two docs whose exact
+    dups arrived earlier, so its buckets hold pairs of old docs that
+    must not be emitted again."""
+    spec = tg.TranscriptSpec(n_base=30, seed=5)
+    planted = assemble_conversations(
+        tg.generate_transcripts(spark, spec)
+    ).select("conv_id", "doc")
+    is_base = F.col("conv_id").startswith("conv_")
+    base_num = F.substring_index("conv_id", "_", -1).cast("int")
+    copies = planted.where(
+        is_base & base_num.isin(0, 1)
+    ).withColumn("conv_id", F.concat(F.lit("copy_"), "conv_id"))
+    batches = [
+        planted.where(is_base & (base_num < 15)),
+        planted.where(~is_base),
+        planted.where(is_base & (base_num >= 15)),
+        copies,
+    ]
+    docs = planted.unionByName(copies)
+    cfg = DedupConfig()
+    streamed = _stream_rows(spark, str(tmp_path / "work"), batches, cfg)
+    assert streamed == _batch_rows(docs, cfg)
+    dups = {(a, b) for a, b, _s, is_dup in streamed if is_dup}
+    truth = {
+        (r["a"], r["b"])
+        for r in tg.truth_pairs(spark, spec).collect()
+        if r["kind"] in tg.DUP_KINDS
+    }
+    assert truth <= dups, truth - dups
+
+
+def test_stream_conv_id_in_two_batches_never_pairs_with_itself(
+    spark, tmp_path
+):
+    """A session window can emit one conv_id twice; its state row and
+    its new row share every bucket but must not become an a == b pair,
+    and its planted dup is still found."""
+    spec = tg.TranscriptSpec(n_base=6, seed=11)
+    docs = assemble_conversations(tg.generate_transcripts(spark, spec)).select(
+        "conv_id", "doc"
+    )
+    base = next(b for b in range(spec.n_base) if tg.truth_kind(b) == "exact")
+    again = docs.where(F.col("conv_id") == tg.base_conv_id(base))
+    rows = _stream_rows(
+        spark, str(tmp_path / "work"), [docs, again], DedupConfig()
+    )
+    assert all(a < b for a, b, _s, _d in rows)
+    pair = tuple(sorted((tg.base_conv_id(base), tg.dup_conv_id(base))))
+    assert any((a, b) == pair and d for a, b, _s, d in rows)
+
+
+def test_stream_bucket_cap_counts_state_members(spark, tmp_path):
+    """A template family larger than ``max_bucket_size`` fills every
+    bucket it shares; batch drops those buckets, and so must the stream,
+    also when a later batch adds one more member (the cap counts the
+    bucket's old members, not only the new ones)."""
+    template = (
+        "thank you for contacting support. your ticket has been received "
+        "and an agent will reply within two business days. please keep "
+        "this reference and do not reply to this automated message. "
+    )
+    spec = tg.TranscriptSpec(n_base=6, seed=11)
+    others = assemble_conversations(
+        tg.generate_transcripts(spark, spec)
+    ).select("conv_id", "doc")
+    family = spark.createDataFrame(
+        [(f"tmpl_{i}", template) for i in range(7)],
+        "conv_id string, doc string",
+    )
+    batches = [
+        others.unionByName(family.where("conv_id != 'tmpl_6'")),
+        family.where("conv_id = 'tmpl_6'"),
+    ]
+    cfg = dataclasses.replace(DedupConfig(), lsh=LshConfig(max_bucket_size=4))
+    streamed = _stream_rows(spark, str(tmp_path / "work"), batches, cfg)
+    assert streamed == _batch_rows(others.unionByName(family), cfg)
+    assert not [r for r in streamed if r[0].startswith("tmpl_")]
+    # the cap is what removed them: the uncapped stream pairs the family
+    uncapped = _stream_rows(
+        spark, str(tmp_path / "uncapped"), batches, DedupConfig()
+    )
+    assert sum(r[0].startswith("tmpl_") for r in uncapped) == 21
 
 
 def test_restart_replay_is_idempotent(spark, tmp_path):
@@ -168,21 +288,28 @@ def test_restart_replay_is_idempotent(spark, tmp_path):
 
 
 def test_failed_batch_releases_signature_cache(spark, tmp_path, monkeypatch):
-    """A batch whose verify raises must not leave its signature cache
-    pinned for the rest of the session."""
+    """A batch whose verify raises must not leave its signature or
+    candidate cache pinned for the rest of the session."""
     from comparador_de_registros_spark.streaming import stream_dedup
 
     made = {}
     real_sign = stream_dedup.compute_signatures
+    real_cand = stream_dedup.unified_candidates
 
     def sign(*args, **kwargs):
         made["sigs"] = real_sign(*args, **kwargs)
         return made["sigs"]
 
+    def candidates(*args, **kwargs):
+        out = real_cand(*args, **kwargs)
+        made["cand"] = out[0]
+        return out
+
     def failing_verify(*args, **kwargs):
         raise RuntimeError("verify failed")
 
     monkeypatch.setattr(stream_dedup, "compute_signatures", sign)
+    monkeypatch.setattr(stream_dedup, "unified_candidates", candidates)
     monkeypatch.setattr(stream_dedup, "verify_pairs", failing_verify)
     docs = spark.createDataFrame(
         [("c1", "hello there"), ("c2", "general kenobi")],
@@ -191,8 +318,9 @@ def test_failed_batch_releases_signature_cache(spark, tmp_path, monkeypatch):
     sd = StreamingDedup(workdir=str(tmp_path / "work"), cfg=DedupConfig())
     with pytest.raises(RuntimeError, match="verify failed"):
         sd.process_batch(docs, 0)
-    level = made["sigs"].storageLevel
-    assert not (level.useMemory or level.useDisk)
+    for name in ("sigs", "cand"):
+        level = made[name].storageLevel
+        assert not (level.useMemory or level.useDisk), name
 
 
 def test_legacy_state_layout_fails_loudly(spark, tmp_path):
